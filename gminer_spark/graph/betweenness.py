@@ -75,13 +75,7 @@ def betweenness_sampled(
 ) -> DataFrame:
     """(id, bc) — Brandes dependency sums from the ``sources(id)``
     sample over the undirected view."""
-    spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
+    sym, _ = tables.undirected(edges)
     levels = _bfs_levels(sym, sources, max_depth)
 
     # Backward accumulation: deepest level has delta = 0.  Levels are
@@ -132,7 +126,6 @@ def betweenness_sampled(
         .groupBy(F.col("v").alias("id"))
         .agg(F.sum("delta").alias("bc"))
     )
-    sym.unpersist()
     return result
 
 
@@ -143,19 +136,13 @@ def harmonic_sampled(
     over the source sample (s ≠ v; unreachable pairs contribute 0).
     Shares the multi-source BFS with :func:`betweenness_sampled`."""
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
+    sym, _ = tables.undirected(edges)
     levels = _bfs_levels(sym, sources, max_depth)
     parts = [
         lvl.select("s", "v", F.lit(1.0 / d).alias("inv"))
         for d, lvl in enumerate(levels)
         if d > 0
     ]
-    sym.unpersist()
     if not parts:
         return spark.createDataFrame([], "id long, harmonic double")
     allp = parts[0]
@@ -173,15 +160,8 @@ def eccentricity_sampled(
     (eccentricity within its component).  Shares :func:`_bfs_levels`;
     the max over all sampled eccentricities lower-bounds the graph
     diameter — the standard sampled diameter estimate."""
-    spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
+    sym, _ = tables.undirected(edges)
     levels = _bfs_levels(sym, sources, max_depth)
-    sym.unpersist()
     parts = [
         lvl.select(F.col("s").alias("id"), F.lit(d).cast("long").alias("d"))
         for d, lvl in enumerate(levels)
@@ -202,14 +182,8 @@ def distance_histogram(
     small-world headline stat on a crawl graph.  Shares the one-
     shuffle-per-level multi-source BFS with betweenness/harmonic."""
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
+    sym, _ = tables.undirected(edges)
     levels = _bfs_levels(sym, sources, max_depth)
-    sym.unpersist()
     parts = [
         lvl.select(F.lit(d).cast("long").alias("d"))
         for d, lvl in enumerate(levels)
@@ -352,12 +326,7 @@ def edge_betweenness_sampled(
     score at web scale (run on a sample, cut the top edges).
     """
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
+    sym, _ = tables.undirected(edges)
     levels = _bfs_levels(sym, sources, max_depth)
 
     delta = levels[-1].select("s", "v", F.lit(0.0).alias("delta"))
@@ -387,9 +356,8 @@ def edge_betweenness_sampled(
             # LAZY leaf, materialized by this level's eager delta
             # checkpoint below (its only same-job consumer): one job
             # per level covers dag + delta, the edge_parts union later
-            # reads the cached dag blocks — and everything runs BEFORE
-            # sym.unpersist() (the documented N-references pitfall).
-            # An all-lazy chain was A/B'd and rejected, see
+            # reads the cached dag blocks (the documented N-references
+            # pitfall).  An all-lazy chain was A/B'd and rejected, see
             # betweenness_sampled's backward-pass note.
             .localCheckpoint(eager=False)
         )
@@ -403,7 +371,6 @@ def edge_betweenness_sampled(
             .localCheckpoint()
         )
     if not edge_parts:
-        sym.unpersist()
         return spark.createDataFrame([], "src long, dst long, eb_micro long")
     allp = edge_parts[0]
     for df in edge_parts[1:]:
@@ -416,7 +383,6 @@ def edge_betweenness_sampled(
             F.round(F.sum("part") * 1e6, 0).cast("long").alias("eb_micro")
         )
     )
-    sym.unpersist()
     return result
 
 
@@ -457,14 +423,8 @@ def closeness_sampled(
     'exact closeness' gap with the estimator actually used at scale.
     Shares the one-shuffle-per-level multi-source BFS."""
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
+    sym, _ = tables.undirected(edges)
     levels = _bfs_levels(sym, sources, max_depth)
-    sym.unpersist()
     parts = [
         lvl.select("v", F.lit(d).cast("long").alias("d"))
         for d, lvl in enumerate(levels)

@@ -10,6 +10,7 @@ messages pre-shuffle.
 Spark mapping: messages = edges ⋈ state, the combiner is partial
 aggregation inside ``groupBy(dst).min(label)``, vote-to-halt is the
 ``changed == 0`` driver-side test.
+Each superstep is one Spark action (:func:`superstep.min_label_round`).
 """
 
 from __future__ import annotations
@@ -19,7 +20,11 @@ from pyspark.sql import functions as F
 
 from gminer_spark.checkpoint import CheckpointStore
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import SuperstepResult, run_supersteps
+from gminer_spark.graph.superstep import (
+    SuperstepResult,
+    min_label_round,
+    run_supersteps,
+)
 
 
 def connected_components(
@@ -34,60 +39,23 @@ def connected_components(
     minimum vertex id in the component — exact parity with the
     reference semantics and with a union-find oracle.
     """
-    spark = edges.sparkSession
-    # sizing count on a persisted input: expensive upstream lineage
-    # materializes once, and symmetrize below reads the cached rows
-    edges, n_in, we_persisted = tables.ensure_materialized(edges)
-    n_shuffle = tables.sized_partitions(spark, n_in)
-    sym = tables.symmetrize(edges).repartition(n_shuffle, "src").persist()
-    edge_count = sym.count()
-    if we_persisted:
-        edges.unpersist()
+    sym, edge_count = tables.undirected(edges)
 
     # state carries an `active` flag — the vote-to-halt mechanism
     # (/root/reference/partition/BVertex.tpp:56-66): only vertices whose
     # label changed last round broadcast this round, so message volume
     # tracks the shrinking frontier instead of |E| every superstep.
     # Correct for hash-min because label propagation is monotone.
-    init = tables.vertices(sym).select(
-        "id", F.col("id").alias("component"), F.lit(True).alias("active")
+    # sym is symmetric and src-partitioned: its distinct srcs are every
+    # vertex, with no exchange.
+    init = (
+        sym.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("component"), F.lit(True).alias("active"))
     )
 
     def step(state: DataFrame, k: int):
-        frontier = state.where(F.col("active"))
-        msgs = (
-            sym.join(frontier, sym.src == frontier.id)
-            .select("dst", "component")
-            .groupBy("dst")
-            .agg(F.min("component").alias("msg"))
-        )
-        new_state = (
-            state.join(msgs, state.id == msgs.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("msg"), F.col("component"))
-                ).alias("component"),
-                F.coalesce(F.col("msg") < F.col("component"), F.lit(False)).alias(
-                    "active"
-                ),
-            )
-        )
-        # ONE action per superstep (was three: checkpoint job +
-        # changed-agg job + the framework's re-checkpoint): a lazy
-        # plan_barrier (the round plan references state twice —
-        # frontier + join) materialized by the changed-count, which
-        # doubles as the vote-to-halt signal.
-        new_state = tables.plan_barrier(new_state, eager=False)
-        changed = new_state.where(F.col("active")).count()
-        metrics = {
-            "edges_scanned": edge_count,
-            "messages_shuffled": edge_count,
-            "delta": float(changed),
-            "changed": int(changed),
-            "_checkpointed": True,
-        }
-        return new_state, metrics
+        return min_label_round(state, sym, "component", F.col("component"), edge_count)
 
     result = run_supersteps(
         init,
@@ -98,7 +66,6 @@ def connected_components(
         resume=resume,
     )
     result.state = result.state.select("id", "component")
-    sym.unpersist()
     return result
 
 

@@ -117,8 +117,9 @@ def label_propagation(
         return result
 
     def step(state: DataFrame, k: int):
-        # ONE action per superstep: lazy barrier materialized by the
-        # changed-count, which is the convergence signal (cc.py idiom)
+        # ONE action per superstep: lazy barrier (the round plan
+        # references state twice) materialized by the changed-count,
+        # which is the convergence signal
         new_state = tables.plan_barrier(advance(state), eager=False)
         changed = new_state.where(F.col("_changed")).count()
         metrics = {

@@ -21,7 +21,11 @@ from pyspark.sql import functions as F
 
 from gminer_spark.checkpoint import CheckpointStore
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import SuperstepResult, run_supersteps
+from gminer_spark.graph.superstep import (
+    SuperstepResult,
+    min_label_round,
+    run_supersteps,
+)
 
 
 def shortest_paths(
@@ -41,6 +45,43 @@ def shortest_paths(
     Undirected by default (each edge relaxes both ways), matching the
     reference's adjacency-list graphs.
     """
+    own_rel = weight_col is not None or directed
+    if not own_rel:
+        sym, edge_count = tables.undirected(edges)
+        rel = sym.withColumn("w", F.lit(1).cast("long"))
+    else:
+        rel, edge_count = _relax_table(edges, weight_col, directed)
+
+    src_set = sources.select(F.col("id").cast("long").alias("id")).distinct()
+    init = (
+        tables.vertices(rel)
+        .join(src_set.withColumn("_s", F.lit(True)), on="id", how="inner")
+        .select("id", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("active"))
+    )
+
+    def step(state: DataFrame, k: int):
+        return min_label_round(state, rel, "dist", F.col("dist") + F.col("w"), edge_count)
+
+    result = run_supersteps(
+        init,
+        step,
+        lambda m: m["changed"] == 0,
+        max_iter=max_iter,
+        store=store,
+        resume=resume,
+    )
+    result.state = result.state.select("id", "dist")
+    if own_rel:
+        rel.unpersist()
+    return result
+
+
+def _relax_table(
+    edges: DataFrame, weight_col: str | None, directed: bool
+) -> tuple[DataFrame, int]:
+    """Persisted ``(src, dst, w)`` relaxation table for the weighted or
+    directed variants (the undirected hop-count case reads the shared
+    :func:`tables.undirected` adjacency instead)."""
     spark = edges.sparkSession
     edges_in, n_in, we_persisted = tables.ensure_materialized(edges)
     n_shuffle = tables.sized_partitions(spark, n_in)
@@ -63,62 +104,7 @@ def shortest_paths(
     edge_count = rel.count()
     if we_persisted:
         edges_in.unpersist()
-
-    src_set = sources.select(F.col("id").cast("long").alias("id")).distinct()
-    init = (
-        tables.vertices(rel)
-        .join(src_set.withColumn("_s", F.lit(True)), on="id", how="inner")
-        .select("id", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("active"))
-    )
-
-    def step(state: DataFrame, k: int):
-        frontier = state.where(F.col("active"))
-        msgs = (
-            rel.join(frontier, rel.src == frontier.id)
-            .select("dst", (F.col("dist") + F.col("w")).alias("cand"))
-            .groupBy("dst")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new_state = (
-            state.select("id", "dist")
-            .join(msgs, state.id == msgs.dst, "full")
-            .select(
-                F.coalesce(F.col("id"), F.col("dst")).alias("id"),
-                F.least(
-                    F.coalesce(F.col("dist"), F.col("cand")),
-                    F.coalesce(F.col("cand"), F.col("dist")),
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.coalesce(F.col("cand") < F.col("dist"), F.lit(False)))
-                ).alias("active"),
-            )
-        )
-        # ONE action per superstep (cc.py idiom): lazy barrier (the
-        # round plan references state twice — frontier + full join)
-        # materialized by the changed-count / vote-to-halt signal.
-        new_state = tables.plan_barrier(new_state, eager=False)
-        changed = new_state.where(F.col("active")).count()
-        metrics = {
-            "edges_scanned": edge_count,
-            "messages_shuffled": edge_count,
-            "delta": float(changed),
-            "changed": int(changed),
-            "_checkpointed": True,
-        }
-        return new_state, metrics
-
-    result = run_supersteps(
-        init,
-        step,
-        lambda m: m["changed"] == 0,
-        max_iter=max_iter,
-        store=store,
-        resume=resume,
-    )
-    result.state = result.state.select("id", "dist")
-    rel.unpersist()
-    return result
+    return rel, edge_count
 
 
 def sssp_oracle_sql(

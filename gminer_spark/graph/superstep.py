@@ -13,8 +13,11 @@ the message shuffle is the ``groupBy(dst)`` inside the step, the
 combiner (/root/reference/util/vecs.tpp:79-107) is Spark's partial
 aggregation, the MPI allreduce termination test
 (/root/reference/util/communication.hpp:20-30) is a driver-side
-``agg().collect()``, and the per-superstep barrier is the action that
-materializes the checkpoint.
+aggregate, and the per-superstep barrier is the action that
+materializes the new state.  :func:`min_label_round` is the one-action
+form for min-combiner programs (hash-min CC, Bellman-Ford): the
+termination counts ride on the materializing action as an
+``Observation`` instead of a second query.
 
 Lineage is truncated every superstep (checkpoint write + re-read, or
 ``localCheckpoint`` when no store is given) — otherwise the iterative
@@ -27,7 +30,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 from gminer_spark.checkpoint import CheckpointStore
 
@@ -87,8 +91,8 @@ def run_supersteps(
         t0 = time.time()
         new_state, metrics = step_fn(state, k)
         metrics["superstep"] = k
-        # a step_fn that already materialized its state (fused
-        # barrier+signal rounds: cc/lpa/pagerank) sets _checkpointed —
+        # a step_fn that already materialized its state (one-action
+        # rounds: cc/sssp/lpa/pagerank) sets _checkpointed —
         # re-checkpointing a leaf would re-encode the whole table for
         # nothing.  The flag is popped so store commits / history never
         # see it (checkpoint metrics schemas are append-merged).
@@ -108,6 +112,73 @@ def run_supersteps(
             break
 
     return SuperstepResult(state, len(history), k, converged, history)
+
+
+def min_label_round(
+    state: DataFrame, adj: DataFrame, col: str, msg: Column, edges_scanned: int
+) -> tuple[DataFrame, dict[str, Any]]:
+    """One superstep of a min-combiner vertex program as ONE Spark action.
+
+    ``state(id, <col>, active)`` holds a BIGINT value per vertex;
+    ``adj(src, dst, ...)`` is the adjacency; ``msg`` is the value an
+    active vertex sends along each of its edges, as an expression over
+    the joined ``state``/``adj`` row.  Each vertex keeps the min of its
+    own value and its messages, and is active next round iff a message
+    improved it or first reached it (the reference's vote-to-halt,
+    partition/BVertex.tpp:56-66).
+
+    The state is referenced ONCE: a left join to ``adj`` (matching only
+    active vertices) yields every vertex's own row and its outgoing
+    messages, and one ``groupBy`` on the target vertex folds both (min
+    is the combiner, applied map-side).  With one reference, plain
+    eager ``localCheckpoint`` keeps the origin chain linear (the
+    two-reference case needs ``tables.plan_barrier``).  The changed
+    count and the number of message rows come from an ``Observation``
+    on that same action — no second count query.
+    """
+    joined = state.join(adj, (state.id == adj.src) & state.active, "left")
+    no_value = F.lit(None).cast("long")
+    rows = joined.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("id"), F.col(col).alias("own"), no_value.alias("msg")),
+                F.struct(F.col("dst").alias("id"), no_value.alias("own"), msg.alias("msg")),
+            )
+        )
+    ).where(F.col("id").isNotNull())
+    obs = Observation()
+    new_state = (
+        rows.groupBy("id")
+        .agg(
+            F.min("own").alias("own"),
+            F.min("msg").alias("msg"),
+            F.count("msg").alias("n_msgs"),
+        )
+        .select(
+            "id",
+            F.least("own", "msg").alias(col),
+            (
+                F.col("own").isNull() | F.coalesce(F.col("msg") < F.col("own"), F.lit(False))
+            ).alias("active"),
+            "n_msgs",
+        )
+        .observe(
+            obs,
+            F.count(F.when(F.col("active"), 1)).alias("changed"),
+            F.coalesce(F.sum("n_msgs"), F.lit(0)).alias("messages"),
+        )
+        .drop("n_msgs")
+        .localCheckpoint()
+    )
+    counts = obs.get
+    metrics = {
+        "edges_scanned": edges_scanned,
+        "messages_shuffled": int(counts["messages"]),
+        "delta": float(counts["changed"]),
+        "changed": int(counts["changed"]),
+        "_checkpointed": True,
+    }
+    return new_state, metrics
 
 
 def _mark_final(store: CheckpointStore, superstep: int) -> None:

@@ -12,8 +12,9 @@ at step t the walk at vertex v moves to neighbor with index
 over the dst-sorted adjacency — fully deterministic, identical across
 engines and partitionings, yet hash-uniform like a seeded RNG.
 
-Spark shape: the indexed adjacency (src, dst, rn, deg) is built once
-(one window over the neighbor sort) and persisted; each step is ONE
+Spark shape: the indexed adjacency (src, dst, rn, deg) is two in-place
+windows over the shared undirected adjacency (``tables.undirected``,
+built once per edge table and already sorted); each step is ONE
 equi-join on the current vertex with the rn filter applied inside the
 join — walk state never leaves the cluster, lineage truncated per
 step.  At 100 TB the walk table is (|V| × walks) rows per step,
@@ -51,9 +52,8 @@ def random_walks(
     so weighted walks keep the bit-identical cross-engine oracle
     (floating cumulative thresholds would not).
     """
-    spark = edges.sparkSession
-    n_shuffle = tables.shuffle_partitions(spark)
     if weight_col is not None:
+        n_shuffle = tables.shuffle_partitions(edges.sparkSession)
         fwd = edges.select(
             "src", "dst", F.col(weight_col).cast("long").alias("w")
         )
@@ -78,22 +78,13 @@ def random_walks(
             .repartition(n_shuffle, "src")
             .persist()
         )
+        adj.count()
+        verts = tables.vertices(sym)
     else:
-        sym = tables.symmetrize(edges)
-        w = Window.partitionBy("src").orderBy("dst")
-        adj = (
-            sym.select(
-                "src",
-                "dst",
-                (F.row_number().over(w) - 1).alias("rn"),
-                F.count("*").over(Window.partitionBy("src")).alias("deg"),
-            )
-            .repartition(n_shuffle, "src")
-            .persist()
-        )
-    adj.count()
+        sym, _ = tables.undirected(edges)
+        adj = _indexed(sym)
+        verts = sym.select(F.col("src").alias("id")).distinct()
 
-    verts = tables.vertices(sym)
     if starts is not None:
         verts = verts.join(
             starts.select(F.col("id").cast("long").alias("id")).distinct(), on="id"
@@ -132,12 +123,29 @@ def random_walks(
         )
         out.append(stepped.select("start", "walk", F.lit(t).alias("step"), "vertex"))
         pos = stepped
-    pos.count()  # materialize every step's blocks before adj.unpersist()
+    pos.count()  # one job materializes every step, before adj.unpersist()
     result = out[0]
     for df in out[1:]:
         result = result.unionByName(df)
-    adj.unpersist()
+    if weight_col is not None:
+        adj.unpersist()
     return result
+
+
+def _indexed(sym: DataFrame) -> DataFrame:
+    """``(src, dst, rn, deg)``: ``rn`` ranks ``dst`` among ``src``'s
+    neighbors in id order.  ``sym`` is the shared undirected adjacency,
+    already partitioned on ``src`` and sorted by ``(src, dst)``, so both
+    windows run in place (no exchange, no sort): re-deriving the table
+    in each step costs one scan of the cached adjacency, the same as
+    reading a persisted copy."""
+    w = Window.partitionBy("src").orderBy("dst")
+    return sym.select(
+        "src",
+        "dst",
+        (F.row_number().over(w) - 1).alias("rn"),
+        F.count("*").over(Window.partitionBy("src")).alias("deg"),
+    )
 
 
 def random_walks_node2vec(
@@ -173,24 +181,11 @@ def random_walks_node2vec(
     pays).  Returns (start, walk, step, vertex) like
     :func:`random_walks`.
     """
-    spark = edges.sparkSession
-    n_shuffle = tables.shuffle_partitions(spark)
-    sym = tables.symmetrize(edges)
-    w = Window.partitionBy("src").orderBy("dst")
-    adj = (
-        sym.select(
-            "src",
-            "dst",
-            (F.row_number().over(w) - 1).alias("rn"),
-            F.count("*").over(Window.partitionBy("src")).alias("deg"),
-        )
-        .repartition(n_shuffle, "src")
-        .persist()
-    )
-    adj.count()
-    nb = adj.select(F.col("src").alias("prev"), F.col("dst").alias("cand"))
+    sym, _ = tables.undirected(edges)
+    adj = _indexed(sym)
+    nb = sym.select(F.col("src").alias("prev"), F.col("dst").alias("cand"))
 
-    verts = tables.vertices(sym)
+    verts = sym.select(F.col("src").alias("id")).distinct()
     if starts is not None:
         verts = verts.join(
             starts.select(F.col("id").cast("long").alias("id")).distinct(), on="id"
@@ -282,11 +277,10 @@ def random_walks_node2vec(
         out.append(stepped.select("start", "walk", F.lit(t).alias("step"), "vertex"))
         pos = stepped
 
-    pos.count()  # materialize every step's blocks before adj.unpersist()
+    pos.count()  # materialize every step's blocks in one job
     result = out[0]
     for df in out[1:]:
         result = result.unionByName(df)
-    adj.unpersist()
     return result
 
 

@@ -4,11 +4,14 @@ The iterative BFS/Brandes/SSSP plans must stay equi-join shaped: no
 cartesian products, no broadcast-nested-loop joins, and no O(|E|)
 broadcast above the gate.  These are the 100-TB posture guarantees —
 a plan regression here survives value checks (results stay right)
-but melts at scale.
+but melts at scale.  The same holds for the action counts pinned at
+the end: one undirected adjacency build per edge table, and one SQL
+action per cc/sssp superstep.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import edges_df, random_graph
@@ -193,3 +196,75 @@ def test_allpairs_prefix_plan_join_shaped(spark):
     )
     plan = _final_plan(allpairs_jaccard(d, threshold_micro=300_000))
     _assert_join_shaped(plan, "allpairs")
+
+
+def test_undirected_adjacency_built_once_per_edge_table(spark, monkeypatch):
+    """cc -> sssp -> sampled betweenness -> node2vec on ONE edge table
+    share one undirected adjacency build."""
+    from gminer_spark.graph import tables
+    from gminer_spark.graph.betweenness import betweenness_sampled
+    from gminer_spark.graph.cc import connected_components
+    from gminer_spark.graph.sssp import shortest_paths
+    from gminer_spark.graph.walks import random_walks_node2vec
+
+    builds = []
+    both_ways = tables._both_ways
+    monkeypatch.setattr(
+        tables, "_both_ways", lambda e: builds.append(1) or both_ways(e)
+    )
+    edges = edges_df(spark, random_graph(n=40, p=0.1, seed=36, directed=False))
+    srcs = spark.createDataFrame([(0,), (7,)], "id long")
+    connected_components(edges)
+    shortest_paths(edges, srcs)
+    betweenness_sampled(edges, srcs, max_depth=3).collect()
+    random_walks_node2vec(edges, walk_len=2).collect()
+    assert len(builds) == 1
+
+
+def _actions_in_group(spark, group: str) -> tuple[int, int]:
+    """(SQL executions, Spark jobs) that ran under job group ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    n_exec = 0
+    for i in range(max(0, execs.size() - 50), execs.size()):
+        it = execs.apply(i).jobs().keySet().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(int(it.next()))
+        n_exec += bool(ids & jobs)
+    return n_exec, len(jobs)
+
+
+@pytest.mark.parametrize("algo", ["cc", "sssp"])
+def test_cc_sssp_one_action_per_superstep(spark, monkeypatch, algo):
+    """Each cc/sssp superstep is ONE SQL action of at most three Spark
+    jobs (the adjacency join's build side, the message shuffle, the
+    checkpoint) — the vote-to-halt count rides on it."""
+    from gminer_spark.graph import cc, sssp, superstep
+
+    sc = spark.sparkContext
+    groups: list[str] = []
+
+    def tagged(*args, **kwargs):
+        groups.append(f"{algo}-superstep-{len(groups) + 1}")
+        sc.setJobGroup(groups[-1], groups[-1])
+        try:
+            return superstep.min_label_round(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    mod = cc if algo == "cc" else sssp
+    monkeypatch.setattr(mod, "min_label_round", tagged)
+    edges = edges_df(spark, random_graph(n=50, p=0.08, seed=37, directed=False))
+    if algo == "cc":
+        res = cc.connected_components(edges)
+    else:
+        srcs = spark.createDataFrame([(3,)], "id long")
+        res = sssp.shortest_paths(edges, srcs)
+    assert res.converged and len(groups) == res.supersteps_run >= 2
+    for g in groups:
+        n_exec, n_jobs = _actions_in_group(spark, g)
+        assert n_exec == 1, (g, n_exec)
+        assert 1 <= n_jobs <= 3, (g, n_jobs)
